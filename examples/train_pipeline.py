@@ -99,7 +99,7 @@ def run_pipeline(
     calling ``release()`` unpersists them — do that only after the packed
     output is consumed, or the whole chain silently recomputes."""
     from pdf2doi_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
         contamination_overlap,
         jaccard_pairs,
         minhash_candidate_pairs,
@@ -154,7 +154,7 @@ def run_pipeline(
     verified = jaccard_pairs(deduped, pairs, text_col="text",
                              threshold=jaccard_threshold)
     edges = verified.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    components = connected_components_star(edges)
+    components = connected_components(edges)
     non_roots = components.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_id")
     )

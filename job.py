@@ -204,7 +204,10 @@ def main() -> None:
                 max_bucket=args.dedup_max_bucket, return_sigs=True,
             )
             dups_path = os.path.join(args.output, "dups")
-            (dups.join(docs.select("doc_id", "url"), "doc_id")
+            # a recrawled url repeats its doc_id in docs: one url per id,
+            # or the join writes one verdict row per crawl
+            urls = docs.select("doc_id", "url").dropDuplicates(["doc_id"])
+            (dups.join(urls, "doc_id")
                  .select("url", "doc_id", "dup_of", "est_jaccard", "source")
                  .write.mode("overwrite").parquet(dups_path))
             # merge excludes the WRITTEN verdicts (stable snapshot, the

@@ -15,7 +15,11 @@ around its shuffle profile at 10^12-row scale:
   valid uniform min-hash family that every engine evaluates identically,
   so the whole operator (signatures, bands, verified Jaccard) stays in
   native expressions with an exact SQL oracle. No Python in the path.
+  ``_sig_df`` + ``_bands_from_sigs`` are the one signature and band
+  builder; the persisted incremental index (dedup_index.py) uses them too.
 * **n-gram Jaccard** — exact verified similarity for candidate pairs.
+* **connected components** — the one cluster finisher (large-star/
+  small-star) turning verified pairs into min-id clusters.
 * **SimHash**    — 64-bit bit-vote fingerprint via a vectorized pandas UDF
   (per-bit voting is the one step that is genuinely cheaper in numpy than
   in 64 native aggregations); near-dup = Hamming ≤ threshold within
@@ -256,28 +260,50 @@ def minhash_signature(col: Column, num_hashes: int = 12,
     raise ValueError(f"unknown hash_fn {hash_fn!r}: use 'md5' or 'xxhash64'")
 
 
-def minhash_bands(df: DataFrame, text_col: str = "text", num_hashes: int = 12,
-                  bands: int = 4, hash_fn: str = "md5") -> DataFrame:
-    """doc_id × band rows: (doc_id, band_idx, band_hash). rows = docs × b —
-    bounded fan-out; band_hash is a 32-byte md5 string (``hash_fn='md5'``)
-    or an 8-byte bigint (``hash_fn='xxhash64'`` — 4× narrower shuffle rows
-    on top of the cheaper signature)."""
-    if num_hashes % bands != 0:
+def _check_bands(num_hashes: int, bands: int) -> None:
+    """The one band-scheme guard of every banding entry point (one-shot
+    ``minhash_bands`` and the persisted index's build): a remainder would
+    silently compute-but-ignore the trailing hashes and change the
+    effective b*r recall curve — for the LIFE of a persisted index, since
+    probe/merge replay the stored params."""
+    if bands <= 0 or num_hashes % bands != 0:
         raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands "
-            f"({bands}) — a remainder would silently compute-but-ignore "
-            f"the trailing hashes and change the effective b*r recall curve"
+            f"num_hashes ({num_hashes}) must divide evenly into bands "
+            f"({bands}): it must be divisible by a positive band count"
         )
-    rows_per_band = num_hashes // bands
-    sh = df.filter(has_min_words(F.col(text_col))).select(
+
+
+def _sig_df(docs: DataFrame, text_col: str, num_hashes: int,
+            hash_fn: str) -> DataFrame:
+    """(doc_id, mh0..mh{k-1}) for every doc with at least one shingle.
+
+    NULL doc_ids are dropped outright: every downstream consumer keys on
+    doc_id (band self-joins, anti-joins, semi-joins, best-match windows),
+    and a NULL key matches nothing — a null-id row would re-append to a
+    persisted index on EVERY merge (the idempotency anti-join can never
+    see it) and never be findable by any probe."""
+    sh = docs.filter(
+        F.col("doc_id").isNotNull() & has_min_words(F.col(text_col))
+    ).select(
         F.col("doc_id"), word_shingles(F.col(text_col)).alias("sh")
     )
-    sig = sh.select(
+    return sh.select(
         "doc_id", *minhash_signature(F.col("sh"), num_hashes, hash_fn)
     )
+
+
+def _bands_from_sigs(sigs: DataFrame, num_hashes: int, bands: int,
+                     hash_fn: str) -> DataFrame:
+    """(doc_id, band_idx, band_hash) from a signature table — THE band
+    construction: one-shot banding, index build, merge, probe and
+    compaction all derive postings here, so they cannot drift apart, and
+    the index paths band stored signatures without re-shingling the text
+    (the signature pass is the heavy compute)."""
+    rows_per_band = num_hashes // bands
     band_cols = []
     for b in range(bands):
-        parts = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
+        parts = [F.col(f"mh{b * rows_per_band + r}")
+                 for r in range(rows_per_band)]
         band_hash = (
             F.md5(F.concat_ws("|", *parts)) if hash_fn == "md5"
             else F.xxhash64(*parts)
@@ -286,10 +312,23 @@ def minhash_bands(df: DataFrame, text_col: str = "text", num_hashes: int = 12,
             F.struct(F.lit(b).alias("band_idx"), band_hash.alias("band_hash"))
         )
     return (
-        sig.select(F.col("doc_id"), F.explode(F.array(*band_cols)).alias("band"))
+        sigs.select(F.col("doc_id"),
+                    F.explode(F.array(*band_cols)).alias("band"))
         .select("doc_id", F.col("band.band_idx").alias("band_idx"),
                 F.col("band.band_hash").alias("band_hash"))
     )
+
+
+def minhash_bands(df: DataFrame, text_col: str = "text", num_hashes: int = 12,
+                  bands: int = 4, hash_fn: str = "md5") -> DataFrame:
+    """doc_id × band rows: (doc_id, band_idx, band_hash). rows = docs × b —
+    bounded fan-out; band_hash is a 32-byte md5 string (``hash_fn='md5'``)
+    or an 8-byte bigint (``hash_fn='xxhash64'`` — 4× narrower shuffle rows
+    on top of the cheaper signature). Rows with a NULL doc_id are dropped
+    (they can never match in any join)."""
+    _check_bands(num_hashes, bands)
+    return _bands_from_sigs(_sig_df(df, text_col, num_hashes, hash_fn),
+                            num_hashes, bands, hash_fn)
 
 
 def minhash_bucket_profile(df: DataFrame, text_col: str = "text",
@@ -536,78 +575,6 @@ def _truncate_lineage(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFrame:
-    """Near-duplicate clustering finisher: ``(a, b)`` pair list →
-    ``(node, component)`` where component is the minimum node id reachable.
-
-    This is the step that turns pairwise candidates (MinHash/SimHash band
-    collisions, verified Jaccard pairs) into dedup clusters with a
-    deterministic canonical representative (the component id itself).
-
-    Algorithm: iterative min-label propagation — each round every node
-    takes the min of its own label and its neighbours' labels; converges in
-    O(component diameter) rounds. Near-dup graphs are unions of small
-    dense clusters (tiny diameter), so a handful of rounds suffices; the
-    production-hardened variant for adversarial diameters is
-    large-star/small-star (alternating, same DataFrame shapes). Each round
-    is one broadcast-free join + min-agg; ``_truncate_lineage`` cuts the
-    plan each round so it does not grow with iterations (reliable
-    ``checkpoint()`` when the session has a checkpoint dir, else
-    ``localCheckpoint``).
-
-    Raises ``RuntimeError`` if the fixpoint is not reached within
-    ``max_iterations`` — silently returning split components would make a
-    dedup pass KEEP duplicates with no signal; long-chain graphs should
-    raise the budget (or switch to large-star/small-star).
-    """
-    sym = (
-        edges.select(F.col("a").cast("long").alias("src"),
-                     F.col("b").cast("long").alias("dst"))
-        .union(edges.select(F.col("b").cast("long").alias("src"),
-                            F.col("a").cast("long").alias("dst")))
-        .distinct()
-        .transform(_truncate_lineage)
-    )
-    labels = (
-        sym.select(F.col("src").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .transform(_truncate_lineage)
-    )
-    for _ in range(max_iterations):
-        neigh = (
-            sym.join(labels, sym["src"] == labels["node"])
-            .groupBy(sym["dst"].alias("node"))
-            .agg(F.min("label").alias("neigh_min"))
-        )
-        new_labels = (
-            labels.join(neigh, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("neigh_min", "label")
-                ).alias("label"),
-            )
-            .transform(_truncate_lineage)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") < F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iterations} "
-            f"iterations (component diameter exceeds the budget); raise "
-            f"max_iterations"
-        )
-    return labels.select("node", F.col("label").alias("component")).orderBy("node")
-
-
 def _edge_checksum(edges: DataFrame) -> tuple:
     """Order-independent fingerprint of an edge set (count + hash-XOR) —
     the cheap fixpoint detector for the star rounds; a collision would need
@@ -620,17 +587,21 @@ def _edge_checksum(edges: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-def connected_components_star(edges: DataFrame,
-                              max_iterations: int = 50) -> DataFrame:
-    """Large-star/small-star connected components — the production-hardened
-    alternating algorithm (Kiveris et al., "Connected Components in
-    MapReduce and Beyond"): converges in O(log diameter) rounds instead of
-    min-label propagation's O(diameter), so adversarial long-chain graphs
-    (linked boilerplate chains, crawl redirect paths) finish in a handful
-    of shuffles. Same contract as ``connected_components``: ``(a, b)``
-    pairs → ``(node, component)`` with the component minimum as label.
+def connected_components(edges: DataFrame,
+                         max_iterations: int = 50) -> DataFrame:
+    """Near-duplicate clustering finisher: ``(a, b)`` pair list →
+    ``(node, component)`` where component is the minimum node id reachable.
 
-    Round shapes (each one join + one min-agg, all shuffle-on-node):
+    This is the step that turns pairwise candidates (MinHash/SimHash band
+    collisions, verified Jaccard pairs) into dedup clusters with a
+    deterministic canonical representative (the component id itself).
+
+    Algorithm: large-star/small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond"), alternating; converges in
+    O(log diameter) rounds, so adversarial long-chain graphs (linked
+    boilerplate chains, crawl redirect paths) finish in a handful of
+    shuffles. Round shapes (each one join + one min-agg, all
+    shuffle-on-node):
 
     * **large-star**: every node ``u`` points its LARGER neighbours at the
       minimum of its neighbourhood (incl. itself) — long tails collapse;
@@ -639,6 +610,16 @@ def connected_components_star(edges: DataFrame,
 
     Fixpoint when the small-star round leaves the edge set unchanged
     (order-independent checksum); then edges are exactly (node → root).
+    ``_truncate_lineage`` cuts the plan each round so it does not grow
+    with iterations.
+
+    Self-loops are dropped before the first round, so a node whose ONLY
+    edge is ``(x, x)`` is absent from the output. No caller makes one:
+    candidate pairs are emitted with ``a < b``.
+
+    Raises ``RuntimeError`` if the fixpoint is not reached within
+    ``max_iterations`` — silently returning split components would make a
+    dedup pass KEEP duplicates with no signal.
     """
     e = (
         edges.select(F.col("a").cast("long").alias("u"),
@@ -694,7 +675,7 @@ def connected_components_star(edges: DataFrame,
         prev = cur
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge within "
+            f"connected_components did not converge within "
             f"{max_iterations} alternating rounds"
         )
     # Converged edge set is (node -> component root); roots map to themselves.

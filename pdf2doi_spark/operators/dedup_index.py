@@ -52,11 +52,11 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pdf2doi_spark.operators.dedup import (
+    _bands_from_sigs,
+    _check_bands,
+    _sig_df,
     _truncate_lineage,
     cap_buckets,
-    has_min_words,
-    minhash_signature,
-    word_shingles,
 )
 from pdf2doi_spark.sources.io import (
     _fs_read_small,
@@ -77,49 +77,6 @@ def load_index_params(spark: SparkSession, index_path: str) -> dict:
             f"no minhash index at {index_path!r} (missing {_PARAMS_FILE})"
         )
     return json.loads(_fs_read_small(spark, _params_path(index_path)))
-
-
-def _sig_df(docs: DataFrame, text_col: str, num_hashes: int,
-            hash_fn: str) -> DataFrame:
-    # NULL doc_ids are dropped outright: every downstream consumer keys on
-    # doc_id (anti-joins, semi-joins, best-match windows), and a NULL key
-    # matches nothing — a null-id row would re-append to the index on
-    # EVERY merge (the idempotency anti-join can never see it) and never
-    # be findable by any probe.
-    sh = docs.filter(
-        F.col("doc_id").isNotNull() & has_min_words(F.col(text_col))
-    ).select(
-        F.col("doc_id"), word_shingles(F.col(text_col)).alias("sh")
-    )
-    return sh.select(
-        "doc_id", *minhash_signature(F.col("sh"), num_hashes, hash_fn)
-    )
-
-
-def _bands_from_sigs(sigs: DataFrame, num_hashes: int, bands: int,
-                     hash_fn: str) -> DataFrame:
-    """(doc_id, band_idx, band_hash) derived from an existing signature
-    table — same band construction as dedup.minhash_bands, but without
-    re-shingling and re-hashing the text (the signature pass is the heavy
-    compute; build/merge would otherwise pay it twice)."""
-    rows_per_band = num_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh{b * rows_per_band + r}")
-                 for r in range(rows_per_band)]
-        band_hash = (
-            F.md5(F.concat_ws("|", *parts)) if hash_fn == "md5"
-            else F.xxhash64(*parts)
-        )
-        band_cols.append(
-            F.struct(F.lit(b).alias("band_idx"), band_hash.alias("band_hash"))
-        )
-    return (
-        sigs.select(F.col("doc_id"),
-                    F.explode(F.array(*band_cols)).alias("band"))
-        .select("doc_id", F.col("band.band_idx").alias("band_idx"),
-                F.col("band.band_hash").alias("band_hash"))
-    )
 
 
 def _sp(n_parts: int):
@@ -156,15 +113,7 @@ def build_minhash_index(spark: SparkSession, docs: DataFrame,
                         hash_fn: str = "md5", n_parts: int = 64) -> None:
     """Create the persisted index from an initial corpus (typically the
     survivors of a one-shot near-dup pass). Overwrites ``index_path``."""
-    if bands <= 0 or num_hashes % bands != 0:
-        # same contract as dedup.minhash_bands: a remainder would silently
-        # drop trailing minhash components from every band for the LIFE of
-        # the persisted index (probe/merge replay the stored params, so
-        # nothing downstream could ever notice)
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must divide evenly into "
-            f"bands ({bands})"
-        )
+    _check_bands(num_hashes, bands)
     sigs = _sig_df(docs, text_col, num_hashes, hash_fn) \
         .dropDuplicates(["doc_id"]) \
         .withColumn("sp", _sp(n_parts))
@@ -261,8 +210,9 @@ def incremental_near_dups(spark: SparkSession, index_path: str,
     preferred over intra-batch matches at equal similarity. Docs shorter
     than the shingle minimum never signature, so they never report.
     Resolution is one-level (a doc is not re-pointed to its dup's dup):
-    callers wanting full clusters feed the pairs to
-    ``dedup.connected_components``.
+    callers wanting full clusters feed the ``(doc_id, dup_of)`` pairs, as
+    ``(a, b)``, to ``dedup.connected_components`` (the one CC engine,
+    large-star/small-star).
     """
     p = load_index_params(spark, index_path)
     num_hashes, bands_n = p["num_hashes"], p["bands"]
@@ -393,19 +343,21 @@ def merge_minhash_index(spark: SparkSession, index_path: str,
     re-merges to a no-op. ``exclude``'s plan is evaluated lazily inside
     this call — build it from the index BEFORE merging (the normal
     probe-then-merge order); its parquet reads keep their pre-append file
-    listing, so the self-reference is safe in that order. Appends are hash-distributed on the partition
-    key → at most one new file per touched partition per merge; compact
-    with ``build_minhash_index`` over the full corpus when file counts
-    warrant (one rewrite, offline).
+    listing, so the self-reference is safe in that order. Appends are
+    hash-distributed on the partition key → at most one new file per
+    touched partition per merge; run ``compact_minhash_index`` when file
+    counts warrant (one rewrite, offline).
 
     Crash ordering (ADVICE r4): **postings are appended BEFORE sigs.**
     Sigs is the idempotency key — a doc is "in the index" iff its sigs
     row exists — so a job that dies between the two appends leaves only
     orphan postings, and the retry (anti-join sees the doc as absent)
-    re-appends BOTH tables: the doc converges to findable, the duplicate
-    postings are harmless because every probe ``.distinct()``s its
-    collision pairs (they only inflate ``minhash_index_profile`` counts
-    until the next compaction rewrites them away). The reverse order had
+    re-appends BOTH tables: the doc converges to findable. Its duplicate
+    postings leave probe PAIRS unchanged (every probe ``.distinct()``s its
+    collision pairs) but inflate bucket sizes — ``minhash_index_profile``
+    counts and the probe's ``max_bucket`` cap, which can then exclude a
+    legitimate bucket — until ``compact_minhash_index`` rebuilds postings
+    from sigs and drops them. The reverse order had
     a permanent-desync window: sigs committed ⇒ retry skips the doc ⇒ its
     postings never exist ⇒ indexed but unfindable by every future probe.
 
@@ -491,8 +443,12 @@ def compact_minhash_index(spark: SparkSession, index_path: str) -> None:
     partition holds up to K small files; scan cost and open-file overhead
     creep up with corpus age. Run this offline when file counts warrant
     (it is one full read+write of the index — the same cost as one
-    signature-free merge of the whole corpus). Values are untouched.
-    Via a .tmp swap because Spark (correctly) refuses to overwrite a path
+    signature-free merge of the whole corpus). Sigs values are untouched;
+    postings are REBUILT from the compacted sigs with the one band
+    builder, never copied — so duplicate postings a retried merge left
+    behind (see ``merge_minhash_index``), and orphans of a crashed merge
+    that was never retried, are gone: postings == sigs × bands again.
+    Via a .cmp copy because Spark (correctly) refuses to overwrite a path
     it is reading from.
 
     Crash safety: ``_params`` is REMOVED before the destructive rewrite
@@ -511,13 +467,19 @@ def compact_minhash_index(spark: SparkSession, index_path: str) -> None:
     p = load_index_params(spark, index_path)  # refuse half-built index
     root = index_path.rstrip("/")
     params_raw = json.dumps(p)
-    tmps = {}
-    for table, part_col in (("sigs", "sp"), ("postings", "pq")):
-        tmp = f"{root}/{table}.cmp"
-        live = _read_index_table(spark, root, table, p)
-        (live.repartition(F.col(part_col))
-             .write.mode("overwrite").partitionBy(part_col).parquet(tmp))
-        tmps[table] = (tmp, part_col, live.schema)
+    sigs_tmp = f"{root}/sigs.cmp"
+    live_sigs = _read_index_table(spark, root, "sigs", p)
+    (live_sigs.repartition(F.col("sp"))
+              .write.mode("overwrite").partitionBy("sp").parquet(sigs_tmp))
+    posts = _bands_from_sigs(
+        spark.read.schema(live_sigs.schema).parquet(sigs_tmp),
+        p["num_hashes"], p["bands"], p["hash_fn"],
+    ).withColumn("pq", _pq(p["n_parts"]))
+    posts_tmp = f"{root}/postings.cmp"
+    (posts.repartition(F.col("pq"))
+          .write.mode("overwrite").partitionBy("pq").parquet(posts_tmp))
+    tmps = {"sigs": (sigs_tmp, "sp", live_sigs.schema),
+            "postings": (posts_tmp, "pq", posts.schema)}
     # stage the params restore BEFORE anything destructive happens
     params_tmp = _params_path(index_path) + ".tmp"
     _fs_write_small(spark, params_tmp, params_raw)

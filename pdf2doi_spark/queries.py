@@ -1918,33 +1918,6 @@ def _q_sketch_overlap():
     return q, sql
 
 
-def _q_dup_components_star():
-    """Same candidate graph and recursive-CTE oracle as ``dup_components``,
-    computed with the large-star/small-star alternating algorithm
-    (O(log diameter) rounds) — both variants must reach the identical
-    min-label fixpoint."""
-    base_q, sql = _q_dup_components()
-
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pdf2doi_spark.operators.dedup import connected_components_star
-
-        d = _docs(spark, sf_dir).select("doc_id")
-        ids = d.select(F.col("doc_id").alias("b"))
-        chain = (
-            d.filter(F.col("doc_id") % 5 < 2)
-            .select(F.col("doc_id").alias("a"), (F.col("doc_id") + 1).alias("b"))
-            .join(ids, "b")
-        )
-        longr = (
-            d.filter(F.col("doc_id") % 11 == 0)
-            .select(F.col("doc_id").alias("a"), (F.col("doc_id") + 7).alias("b"))
-            .join(ids, "b")
-        )
-        return connected_components_star(chain.unionByName(longr))
-
-    return q, sql
-
-
 def _q_media_features():
     """Multimodal plumbing under the driver gate: a media table derived
     from documents (payload = utf-8 bytes of text, kind by doc_id%3) runs
@@ -2024,12 +1997,14 @@ def _q_frame_samples():
     return q, sql
 
 
-def _q_dup_components():
+def _q_dup_components_star():
     """Connected components over a deterministic near-dup candidate graph
     (chain edges doc→doc+1 where doc%5<2, long-range edges doc→doc+7 where
     doc%11==0 — components that genuinely merge across edge kinds). Spark:
-    iterative min-label propagation; oracle: DuckDB recursive CTE computing
-    min reachable id — the same fixpoint by definition."""
+    large-star/small-star ``connected_components``; oracle: DuckDB
+    recursive CTE computing min reachable id — the same fixpoint by
+    definition. No edge is a self-loop, so the engine's drop of
+    self-loop-only nodes never applies here."""
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pdf2doi_spark.operators.dedup import connected_components
 
@@ -3179,7 +3154,6 @@ _BUILDERS = {
     "incremental_near_dups": _q_incremental_near_dups,
     "dedup_bucket_profile": _q_dedup_bucket_profile,
     "dedup_survivors": _q_dedup_survivors,
-    "dup_components": _q_dup_components,
     "dup_components_star": _q_dup_components_star,
     "media_features": _q_media_features,
     "frame_samples": _q_frame_samples,
@@ -3243,8 +3217,6 @@ _BUILDERS = {
 #                              oracle
 #   minhash_bucket_profile  -> dedup_bucket_profile (minhash + simhash +
 #                              embedding families)
-#   dup_components          -> dup_components_star (equivalence pinned by
-#                              tests/test_operators.py)
 #   repetition_signals, compression_ratio -> doc_signals (fused)
 #   approx_stats_sketch     -> approx_stats emits within-tolerance
 #                              verdicts for the same sketches

@@ -551,9 +551,10 @@ def _parse_cdx_ts(value: str, *, round_up: bool = False):
     ``read_cdx_index`` parses ``capture_ts`` with ``try_to_timestamp``
     (session timezone), so the bound must be interpreted in the SAME
     zone or the window shifts by the session offset whenever
-    ``spark.sql.session.timeZone`` is overridden away from UTC. An ISO
+    ``spark.sql.session.timeZone`` differs from UTC; ``scope_cdx_index``
+    hands the bound to Spark as a string for exactly that reason. An ISO
     string with an explicit offset/Z stays aware (the user stated a
-    zone)."""
+    zone, and its string form carries the offset)."""
     v = value.strip()
     if v.isdigit() and len(v) <= 14:
         if not round_up:
@@ -618,13 +619,13 @@ def scope_cdx_index(index: DataFrame, *, host: Optional[str] = None,
             F.col("urlkey").startswith(key + ")")
             | F.col("urlkey").startswith(key + ",")
         )
+    # bounds are parsed session-side from their string form: F.lit of a
+    # naive datetime would convert in the DRIVER's local zone, not
+    # spark.sql.session.timeZone (the zone capture_ts was parsed in)
     if ts_from:
-        out = out.filter(
-            F.col("capture_ts") >= F.lit(_parse_cdx_ts(ts_from))
-        )
+        out = out.filter(F.col("capture_ts") >= F.to_timestamp(
+            F.lit(str(_parse_cdx_ts(ts_from)))))
     if ts_to:
-        out = out.filter(
-            F.col("capture_ts")
-            <= F.lit(_parse_cdx_ts(ts_to, round_up=True))
-        )
+        out = out.filter(F.col("capture_ts") <= F.to_timestamp(
+            F.lit(str(_parse_cdx_ts(ts_to, round_up=True)))))
     return out

@@ -524,75 +524,52 @@ def test_tier_rank_matches_kernel(spark, sf_dir):
 
 
 def test_connected_components_matches_union_find(spark):
-    """Label propagation fixpoint == classic union-find on a graph with
-    merging chains, a cycle, and isolated pairs."""
-    from pdf2doi_spark.operators.dedup import connected_components
-
-    edges = [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 13),
-             (20, 21), (5, 13), (40, 41)]
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            spark.createDataFrame(edges, "a long, b long")
-        ).collect()
-    }
-    assert got == want
-
-
-def test_star_components_match_min_label_and_handle_long_paths(spark):
-    """large-star/small-star == min-label propagation on mixed graphs, AND
-    converges on a diameter-60 path (where the O(diameter) min-label
-    variant's default 25-round budget raises, as documented)."""
+    """Large-star/small-star fixpoint == classic union-find on a graph with
+    merging chains, a cycle and isolated pairs, on a seeded random graph,
+    and on a diameter-60 path (O(log d) rounds); a round budget too small
+    for the path raises instead of returning split components."""
     import random
 
-    import pytest
+    from pdf2doi_spark.operators.dedup import connected_components
 
-    from pdf2doi_spark.operators.dedup import (
-        connected_components, connected_components_star,
-    )
-
-    # equivalence on a seeded random graph + the union-find fixture shapes
     rng = random.Random(7)
     rand_edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(70)]
+    path_edges = [(i, i + 1) for i in range(60)]
     fixtures = [
         [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 13),
          (20, 21), (5, 13), (40, 41)],
         [(a, b) for a, b in rand_edges if a != b],
+        path_edges,
     ]
     for edges in fixtures:
-        df = spark.createDataFrame(edges, "a long, b long")
-        want = {(r["node"], r["component"])
-                for r in connected_components(df).collect()}
-        got = {(r["node"], r["component"])
-               for r in connected_components_star(df).collect()}
+        parent = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        want = {n: find(n) for n in parent}
+
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components(
+                spark.createDataFrame(edges, "a long, b long")
+            ).collect()
+        }
         assert got == want
 
-    # a path graph of diameter 60: star variant converges in O(log d)
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(60)], "a long, b long"
-    )
-    star = connected_components_star(path).collect()
-    assert {r["component"] for r in star} == {0}
-    assert len(star) == 61
-    # ... while min-label's default budget raises rather than silently
-    # returning split components (the documented contract)
+    # the path is one component rooted at 0
+    assert set(want.values()) == {0} and len(want) == 61
+    path = spark.createDataFrame(path_edges, "a long, b long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(path, max_iterations=25)
+        connected_components(path, max_iterations=1)
 
 
 @pytest.mark.parametrize("scale_dir", [
@@ -1030,6 +1007,9 @@ def test_minhash_rejects_indivisible_bands(spark):
     d = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
     with pytest.raises(ValueError, match="divisible"):
         minhash_bands(d, num_hashes=10, bands=4)
+    # a zero band count is refused by the same check, not a ZeroDivisionError
+    with pytest.raises(ValueError, match="divisible"):
+        minhash_bands(d, num_hashes=12, bands=0)
 
 
 def test_warc_fractional_second_dates_parse():
@@ -1537,16 +1517,14 @@ def test_components_use_reliable_checkpoint_when_dir_configured(spark, tmp_path)
     when the session has a checkpoint dir (localCheckpoint blocks die with
     their executor — fatal for a multi-hour CC job on a real cluster) and
     produce identical components either way."""
-    from pdf2doi_spark.operators.dedup import (
-        connected_components_star,
-    )
+    from pdf2doi_spark.operators.dedup import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (11, 12), (5, 3)], "a long, b long"
     )
     before = {
         r["node"]: r["component"]
-        for r in connected_components_star(edges).collect()
+        for r in connected_components(edges).collect()
     }
 
     ckpt = str(tmp_path / "ckpt")
@@ -1555,7 +1533,7 @@ def test_components_use_reliable_checkpoint_when_dir_configured(spark, tmp_path)
     try:
         after = {
             r["node"]: r["component"]
-            for r in connected_components_star(edges).collect()
+            for r in connected_components(edges).collect()
         }
         # durable files actually landed under the configured dir
         import glob

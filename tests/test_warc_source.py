@@ -323,7 +323,7 @@ def test_scope_cdx_index_host_and_window(spark):
     """VERDICT r4 #2: CDX-level scoping — SURT prefix or plain hostname,
     inclusive 14-digit/ISO timestamp bounds, all as native pushable
     predicates over the index (zero WARC bytes touched)."""
-    from datetime import datetime, timezone
+    from datetime import datetime, timedelta, timezone
 
     from pdf2doi_spark.sources.warc import _parse_cdx_ts, scope_cdx_index
 
@@ -359,6 +359,25 @@ def test_scope_cdx_index_host_and_window(spark):
     # one-day window includes captures later that day
     got = scope_cdx_index(idx, ts_from="20240105", ts_to="20240105")
     assert [r.urlkey for r in got.collect()] == ["org,example,sub)/s"]
+    # the same window under a session zone that is neither UTC nor the
+    # driver's local zone: capture_ts parsed from the CDX digits in the
+    # session zone (as read_cdx_index does) must meet bounds read in that
+    # SAME zone, never in the driver's
+    driver_offset = datetime(2024, 1, 5).astimezone().utcoffset()
+    zone = ("Asia/Tokyo" if driver_offset != timedelta(hours=9)
+            else "America/New_York")
+    prev_zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        zidx = spark.createDataFrame(
+            [(u, ts.strftime("%Y%m%d%H%M%S")) for u, ts, *_ in rows],
+            "urlkey string, ts string",
+        ).select("urlkey", F.try_to_timestamp(
+            "ts", F.lit("yyyyMMddHHmmss")).alias("capture_ts"))
+        got = scope_cdx_index(zidx, ts_from="20240105", ts_to="20240105")
+        assert [r.urlkey for r in got.collect()] == ["org,example,sub)/s"]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev_zone)
     # ISO spelling + host composition
     got = scope_cdx_index(idx, host="example.org",
                           ts_from="2024-02-01T00:00:00Z")
